@@ -14,12 +14,23 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    # Task threads follow the host's core count when the runner exports
+    # it (local[8] on a 4-core host oversubscribes every stage), else
+    # the test override. Partition counts stay at 8 on every host: the
+    # seeded generators draw `rand(seed)` per partition, so fixture
+    # data depends on the default parallelism, not on the thread count.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.environ.get(
+        "SPARK_GRAFT_TEST_CPUS", "8"
+    )
     s = get_spark(
         app_name="vds-tests",
         master=f"local[{cpus}]",
         shuffle_partitions=8,
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "8g"},
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "8g",
+            "spark.default.parallelism": "8",
+        },
     )
     yield s
 

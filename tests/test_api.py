@@ -219,6 +219,41 @@ def test_facade_filtered_search_including_tail(spark):
         assert (t % 3 == 1) if t < 1000 else ((t - 1000) % 3 == 1)
 
 
+def test_facade_search_returns_each_tail_row_once(spark):
+    """A bsp read over a store with an un-indexed tail returns every
+    matching row exactly once — plain, doc-scoped and filtered — and
+    equals brute force as a list, not only as a set (the brute route's
+    text-table scan already covers the tail rows)."""
+    vdb = _mk_vdb(spark)
+    extra = random_uniform(spark, 12, 4, seed=77).select(
+        (F.col("id") % 3).alias("doc_id"),
+        (F.col("id") + 1000).alias("text_id"),
+        "vector",
+    )
+    vdb.add_documents(extra, reindex=False)
+    assert vdb.tail().count() == 12
+    q = [0.1, -0.2, 0.3, 0.0]
+    doc_of = {r.text_id: r.doc_id for r in vdb.text().collect()}
+    everything = [
+        (r.text_id, round(r.dist, 9)) for r in vdb.brute_force(q, 0.9).collect()
+    ]
+    assert any(t >= 1000 for t, _ in everything)  # the tail has hits
+    cases = {
+        "plain": (vdb.search(q, 0.9), lambda t: True),
+        "doc_id": (vdb.search(q, 0.9, doc_id=1), lambda t: doc_of[t] == 1),
+        "where": (
+            vdb.search(q, 0.9, where="text_id % 2 = 0"),
+            lambda t: t % 2 == 0,
+        ),
+    }
+    for name, (df, keep) in cases.items():
+        got = [(r.text_id, round(r.dist, 9)) for r in df.collect()]
+        ids = [t for t, _ in got]
+        assert len(ids) == len(set(ids)), (name, sorted(ids))
+        want = sorted(hit for hit in everything if keep(hit[0]))
+        assert sorted(got) == want and want, name
+
+
 def _mk_typed(spark, index_type):
     vdb = VectorDatabase(
         spark,

@@ -6,12 +6,15 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from vector_database_spark.operators.index_build import build_index
+from vector_database_spark.operators import search as S
 from vector_database_spark.operators.search import (
     BROADCAST_INDEX_MAX_ROWS,
     _auto_strategy,
+    _index_size,
     brute_force_search,
     estimate_candidate_frac,
     search,
+    search_route,
     search_stats,
 )
 from vector_database_spark.sources.generators import clusters
@@ -30,6 +33,62 @@ def test_auto_strategy_boundaries():
     # beyond the walker cap, a big pruned panel clears the iterative
     # job-latency floor
     assert _auto_strategy(big, 64, 0.01) == "iterative"
+
+
+def test_route_first_matches_estimate_first(monkeypatch):
+    """`search_route` picks the route from the estimate-free bound
+    first; over the boundary grid (and the sizes and panel widths
+    around it) it returns exactly the estimate-first route, and never
+    runs the pilot estimate when the tree loses even at estimate 0."""
+    small = BROADCAST_INDEX_MAX_ROWS
+    big = BROADCAST_INDEX_MAX_ROWS * 10
+    grid = [(small, 1, 0.0), (small, 64, 0.05), (small, 64, 1.0),
+            (big, 1, 1.0), (big, 64, 0.01)]
+    grid += [
+        (n, n_q, est)
+        for n in (0, 2_000, small, small + 2, big)
+        for n_q in (0, 1, 23, 24, 64, 5_000)
+        for est in (0.0, 0.01, 0.05, 0.26, 0.3, 1.0)
+    ]
+    for n, n_q, est in grid:
+        probes = []
+        monkeypatch.setattr(S, "_index_size", lambda idx, doc_id=None: n)
+        monkeypatch.setattr(
+            S, "estimate_candidate_frac",
+            lambda *a, **k: probes.append(1) or est,
+        )
+        panel = [(i, [0.0, 1.0]) for i in range(n_q)]
+        want = _auto_strategy(n, n_q, est)
+        assert search_route(None, panel, 0.5) == want, (n, n_q, est)
+        if _auto_strategy(n, n_q, 0.0) == "brute":
+            assert not probes, (n, n_q, est)
+
+
+def test_brute_route_starts_no_job(spark):
+    """On an index whose size is already memoized, a brute route is
+    decided on the driver: zero Spark jobs in its job group (the
+    pilot estimate it skips would collect the top tree levels)."""
+    vecs = clusters(spark, 600, 8, n_clusters=4, seed=5).select("id", "vector")
+    idx = build_index(vecs, local_threshold=64)
+    _index_size(idx)
+    q = [(0, [0.0] * 8)]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, tracker.getJobIdsForGroup(group)
+
+    route, jobs = jobs_in("route-first", lambda: search_route(idx, q, 0.5))
+    assert route == "brute" and jobs == [], (route, jobs)
+    _, pilot_jobs = jobs_in(
+        "pilot-probe", lambda: estimate_candidate_frac(idx, q, 0.5)
+    )
+    assert pilot_jobs  # the job count above can see a collect
 
 
 def test_pilot_estimate_tracks_measured_frac(spark):

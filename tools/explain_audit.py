@@ -487,12 +487,47 @@ def _facade_mips_knn_dot_df(spark, sf_dir):
     return db.knn_dot([0.1] * 8, 5, nprobe=2)
 
 
+def _facade_bsp_search_df(spark, sf_dir):
+    """One `search` call's full plan over a tiny bsp store with an
+    un-indexed tail: a one-query read routes brute, and the brute
+    route is ONE scan of the text table (tail rows included) against
+    the JVM-local query panel — no tail anti-join, no Python."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from vector_database_spark.api import VectorDatabase
+    from vector_database_spark.sources.generators import random_uniform
+
+    tmp = tempfile.mkdtemp()
+    rows = random_uniform(spark, 90, 8, seed=5).select(
+        (F.col("id") % 2).alias("doc_id"),
+        F.col("id").alias("text_id"),
+        "vector",
+    )
+    db = VectorDatabase(spark, f"{tmp}/s", local_threshold=32)
+    db.add_documents(rows.where(F.col("id") < 80))
+    db.add_documents(rows.where(F.col("id") >= 80), reindex=False)
+    return db.search([0.1] * 8, 0.6)
+
+
 FACADE_CHECKS = {
+    "facade_bsp_search_serving": (
+        _facade_bsp_search_df,
+        ["LocalTableScan", "/s/text]"],
+        ["Scan ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
+         "LeftAnti", "text_index"],
+        "facade 'bsp' search on a store with an un-indexed tail: the "
+        "one-query read routes brute and is ONE text-table scan against "
+        "the JVM-local query panel — no pickled panel, no Python eval, "
+        "no index read and no tail anti-join (the scan already covers "
+        "the tail rows)",
+    ),
     "facade_ivf_search_serving": (
         _facade_ivf_search_df,
         ["ivf_index/vectors"],
         ["ivf_index/centroids", "ivf_index/radius", "BatchEvalPython",
-         "ArrowEvalPython", "CartesianProduct"],
+         "ArrowEvalPython", "CartesianProduct", "Scan ExistingRDD"],
         "facade 'ivf' search: the serving plan scans the cell-pruned "
         "vectors layout + text only — centroid/radius parquets are "
         "cached driver literals, never per-call scans",
@@ -501,7 +536,8 @@ FACADE_CHECKS = {
         _facade_mips_knn_dot_df,
         ["mips_index/vectors"],
         ["mips_index/centroids", "mips_index/radius",
-         "mips_index/mips_meta", "BatchEvalPython", "ArrowEvalPython"],
+         "mips_index/mips_meta", "BatchEvalPython", "ArrowEvalPython",
+         "Scan ExistingRDD"],
         "facade 'mips' knn_dot: the serving plan scans the stored "
         "layout only — centroids/radius/m2 are cached driver values "
         "(the round-12 no-per-call-metadata-read rule, pinned in CI)",
@@ -510,7 +546,8 @@ FACADE_CHECKS = {
         _facade_bq_serving_hd_df,
         ["bq_index/codes"],
         ["bq_index/centroids", "bq_index/meta", "BatchEvalPython",
-         "ArrowEvalPython", "MapInPandas", "CartesianProduct"],
+         "ArrowEvalPython", "MapInPandas", "CartesianProduct",
+         "Scan ExistingRDD"],
         "facade 'bq' serving over an HD layout: the candidate plan "
         "scans ONLY the cell-partitioned codes table — centroids and "
         "HD meta are invalidation-cycle-cached driver literals, never "

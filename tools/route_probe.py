@@ -26,10 +26,9 @@ from pyspark.sql import functions as F
 from vector_database_spark import get_spark
 from vector_database_spark.operators.index_build import build_index
 from vector_database_spark.operators.search import (
-    _auto_strategy,
-    _index_size,
     estimate_candidate_frac,
     search,
+    search_route,
 )
 from vector_database_spark.sources.generators import clusters
 
@@ -62,7 +61,7 @@ def main():
     for dname, dom in domains.items():
         for pname, panel in panels.items():
             est = estimate_candidate_frac(idx, panel, dom)
-            auto_choice = _auto_strategy(_index_size(idx), len(panel), est)
+            auto_choice = search_route(idx, panel, dom)
             times = {s: [] for s in strategies}
             results = {}
             for it in range(runs):

@@ -27,8 +27,10 @@ from pyspark.sql import functions as F
 from vector_database_spark.operators import catalog
 from vector_database_spark.operators.search import (
     brute_force_search,
+    query_panel,
     search as _search,
     search_candidates_auto,
+    search_route,
 )
 
 
@@ -1296,9 +1298,16 @@ class VectorDatabase:
         where=None,
     ) -> DataFrame:
         """Tested `Find` semantics: exact Euclidean matches
-        (doc_id-scoped when given): (text_id, dist). Exact regardless
-        of compaction state: indexed rows go through the tree, tail
-        rows are brute-force refined.
+        (doc_id-scoped when given): (text_id, dist), each matching row
+        once. Exact regardless of compaction state.
+
+        On a bsp store the route is picked first (`search_route`, the
+        same router as `operators.search.search`): from the tree size
+        and the one-query panel alone whenever the tree cannot win,
+        which skips the pilot estimate. The brute route is ONE scan of
+        the text table — indexed and un-indexed tail rows alike — with
+        no separate tail pass. A tree route walks the tree for the
+        indexed rows and brute-force refines the tail rows.
 
         ``where`` (optional Column or SQL string over the text
         table's columns) makes this the facade's FILTERED search —
@@ -1332,9 +1341,15 @@ class VectorDatabase:
                 domain,
             ).select(F.col("id").alias("text_id"), "dist")
         else:
+            idx, panel = self._index_named(), [(0, vector)]
+            route = search_route(idx, panel, domain, doc_id=doc_id)
             res = _search(
-                self._index_named(), vecs, [(0, vector)], domain, doc_id=doc_id
+                idx, vecs, panel, domain, doc_id=doc_id, strategy=route
             ).select(F.col("id").alias("text_id"), "dist")
+            if route == "brute":
+                # the scan covered the whole (filtered, scoped) text
+                # table, tail rows included
+                return res
         t = self._tail_scoped(doc_id)
         if t is not None:
             if pred is not None:
@@ -1445,10 +1460,7 @@ class VectorDatabase:
         from pyspark.sql.window import Window as _W
 
         np_ = int(nprobe) if nprobe is not None else min(4, self.n_cells)
-        qdf = self.spark.createDataFrame(
-            [(0, [float(x) for x in vector])],
-            "qid long, qvec array<double>",
-        )
+        qdf = query_panel(self.spark, [(0, vector)])
         pred = None
         if where is not None:
             pred = F.expr(where) if isinstance(where, str) else where

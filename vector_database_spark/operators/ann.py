@@ -33,6 +33,16 @@ from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from vector_database_spark.functions.vector import dot, euclidean, l2_norm
+from vector_database_spark.operators.search import query_panel
+
+
+def _centroid_panel(spark, centroids: list) -> DataFrame:
+    """``(cell int, cvec array<double>)`` of the driver's centroid
+    list, JVM-local like the query panel (`query_panel`), so the
+    per-call probe's broadcast starts no Python worker."""
+    return query_panel(spark, list(enumerate(centroids))).select(
+        F.col("qid").cast("int").alias("cell"), F.col("qvec").alias("cvec")
+    )
 
 
 def _hyperplanes(dims: int, n_bits: int, n_tables: int, seed: int) -> list[list[list[float]]]:
@@ -365,9 +375,7 @@ def ivf_knn(
         pred = F.expr(where) if isinstance(where, str) else where
         assigned_df = assigned_df.where(pred)
     spark = assigned_df.sparkSession
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cell int, cvec array<double>"
-    )
+    cents = _centroid_panel(spark, centroids)
     n_cells = len(centroids)
 
     def ranked(qdf: DataFrame, np_: int) -> DataFrame:
@@ -938,7 +946,7 @@ def pq_knn(
         .select("qid", "id")
     )
     spark = codes_df.sparkSession
-    qdf = spark.createDataFrame(panel, "qid long, qvec array<double>")
+    qdf = query_panel(spark, panel)
     ranked = (
         codes_df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("_vec"))
         .join(short, "id")
@@ -1239,7 +1247,7 @@ def ivfadc_knn(
         .select("qid", "id")
     )
     spark = codes_df.sparkSession
-    qdf = spark.createDataFrame(panel, "qid long, qvec array<double>")
+    qdf = query_panel(spark, panel)
     ranked = (
         codes_df.select("id", F.col("vector").alias("_vec"))
         .join(short, "id")
@@ -1503,7 +1511,7 @@ def sq8_knn(
         .select("qid", "id")
     )
     spark = enc_df.sparkSession
-    qdf = spark.createDataFrame(panel, "qid long, qvec array<double>")
+    qdf = query_panel(spark, panel)
     ranked = (
         enc_df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("_vec"))
         .join(short, "id")
@@ -2753,10 +2761,7 @@ def _mips_serve(
         pred = F.expr(where) if isinstance(where, str) else where
         assigned = assigned.where(pred)
     spark = assigned.sparkSession
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "cell int, cvec array<double>",
-    )
+    cents = _centroid_panel(spark, centroids)
     qdf = queries_df.select(
         "qid", F.col("qvec").cast("array<double>").alias("qvec")
     ).withColumn("aqv", F.concat(F.col("qvec"), F.array(F.lit(0.0))))

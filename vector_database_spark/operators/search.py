@@ -28,6 +28,7 @@ baseline ANN comparison point.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -40,27 +41,44 @@ from vector_database_spark.functions.vector import (
 from vector_database_spark.plans.iterate import LineageBudget
 
 
-def _as_queries_df(index_or_vectors: DataFrame, queries: DataFrame | list) -> DataFrame:
-    """Accept either a DataFrame (qid, qvec) or a python list of
-    (qid, vector) pairs.
+_PANEL_SCHEMA = pa.schema([("qid", pa.int64()), ("qvec", pa.list_(pa.float64()))])
 
-    List panels must be uniform-width: the cogroup walker images the
-    panel as one dense (n_q, n_dims) matrix. Validated here with a
-    clear error instead of an opaque executor-side reshape failure.
+
+def query_panel(spark, panel: list) -> DataFrame:
+    """The ``(qid long, qvec array<double>)`` relation of a driver-side
+    panel of (qid, vector) pairs, built from an Arrow table so Spark
+    holds it as a JVM-local ``LocalRelation``: broadcasting it starts
+    no job and no Python worker (a pickled-row ``createDataFrame``
+    plans a ``Scan ExistingRDD`` whose every broadcast is a job of
+    Python-worker tasks). Arrow input takes this path whatever the
+    session's Arrow setting.
+
+    Panels must be uniform-width: the cogroup walker images the panel
+    as one dense (n_q, n_dims) matrix. Validated here with a clear
+    error instead of an opaque executor-side reshape failure.
     """
-    if isinstance(queries, DataFrame):
-        return queries
-    widths = {len(v) for _, v in queries}
+    widths = {len(v) for _, v in panel}
     if len(widths) > 1:
         raise ValueError(
             f"query panel has mixed vector widths {sorted(widths)}; "
             "searches require a uniform-width panel (pad or split by width)"
         )
-    spark = index_or_vectors.sparkSession
-    return spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in queries],
-        "qid long, qvec array<double>",
+    table = pa.table(
+        {
+            "qid": [int(q) for q, _ in panel],
+            "qvec": [[float(x) for x in v] for _, v in panel],
+        },
+        schema=_PANEL_SCHEMA,
     )
+    return spark.createDataFrame(table)
+
+
+def _as_queries_df(index_or_vectors: DataFrame, queries: DataFrame | list) -> DataFrame:
+    """Accept either a DataFrame (qid, qvec) or a python list of
+    (qid, vector) pairs (see `query_panel`)."""
+    if isinstance(queries, DataFrame):
+        return queries
+    return query_panel(index_or_vectors.sparkSession, queries)
 
 
 # Bound on memoized shuffle-regime index layouts per index DataFrame:
@@ -748,6 +766,30 @@ def search_candidates_auto(
     return search_candidates(index_df, queries, domain, doc_id=doc_id, **kwargs)
 
 
+def search_route(
+    index_df: DataFrame,
+    queries: DataFrame | list,
+    domain: float,
+    *,
+    doc_id: int | None = None,
+) -> str:
+    """The route `search(strategy='auto')` takes: 'brute' |
+    'broadcast' | 'iterative' (`_auto_strategy` over the tree size,
+    the panel size and the pilot candidate-frac estimate).
+
+    Routes before probing: `_auto_strategy` can only lose the tree as
+    the estimate grows, so when the tree cannot win at an estimate of
+    0 the route is 'brute' without the pilot collect. On an index
+    whose size is memoized that answer starts no Spark job (a panel
+    given as a DataFrame is counted)."""
+    n_q = queries.count() if isinstance(queries, DataFrame) else len(queries)
+    n = _index_size(index_df, doc_id)
+    if _auto_strategy(n, n_q, 0.0) == "brute":
+        return "brute"
+    est = estimate_candidate_frac(index_df, queries, domain, doc_id=doc_id)
+    return _auto_strategy(n, n_q, est)
+
+
 def search(
     index_df: DataFrame,
     vectors_df: DataFrame,
@@ -766,11 +808,12 @@ def search(
 
     Returns ``(qid, id, dist)`` with ``dist <= domain`` under `metric`
     ('euclidean' | 'chebyshev'). `strategy`: 'auto' is cost-based
-    (`_auto_strategy` over corpus size, panel size, and the pilot
-    candidate-frac estimate): the brute codegen scan when the panel
-    can't amortize the tree's fixed cost or the domain doesn't prune
-    (identical refined output either way); otherwise the cogroup
-    walker for small indexes, the iterative frontier join beyond.
+    (`search_route`: corpus size and panel size first, the pilot
+    candidate-frac estimate only when the tree can still win): the
+    brute codegen scan when the panel can't amortize the tree's fixed
+    cost or the domain doesn't prune (identical refined output either
+    way); otherwise the cogroup walker for small indexes, the
+    iterative frontier join beyond.
     Explicit 'brute' | 'broadcast' | 'iterative' override the model.
 
     ``where`` (optional Column or SQL string over `vectors_df`'s
@@ -789,9 +832,7 @@ def search(
         pred = F.expr(where) if isinstance(where, str) else where
         vectors_df = vectors_df.where(pred)
     if strategy == "auto":
-        est = estimate_candidate_frac(index_df, queries, domain, doc_id=doc_id)
-        n_q = queries.count() if isinstance(queries, DataFrame) else len(queries)
-        strategy = _auto_strategy(_index_size(index_df, doc_id), n_q, est)
+        strategy = search_route(index_df, queries, domain, doc_id=doc_id)
     if strategy == "brute":
         scan_df = vectors_df
         if doc_id is not None:
